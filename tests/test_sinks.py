@@ -10,14 +10,14 @@ def test_materialize_and_read_back(spark):
         taskrouter_agents_df,
         taskrouter_segments_df,
     )
-    from twilio_event_streams_reporting_example_spark.sources.sinks import (
-        materialize_taskrouter,
+    from twilio_event_streams_reporting_example_spark.sources.incremental import (
+        initialize_taskrouter,
     )
     from twilio_event_streams_reporting_example_spark.taskrouter.fixture import fixture_df
 
     raw = fixture_df(spark)
     with tempfile.TemporaryDirectory() as d:
-        paths = materialize_taskrouter(spark, raw, d)
+        paths = initialize_taskrouter(spark, raw, d)
 
         log = spark.read.parquet(paths["event_log"])
         # 49 distinct taskrouter events (1 dup dropped, 1 non-taskrouter dropped)
@@ -30,7 +30,7 @@ def test_materialize_and_read_back(spark):
         assert seg.select(live.columns).exceptAll(live).count() == 0
 
         ag = spark.read.parquet(paths["agents"])
-        live_ag = taskrouter_agents_df(spark, raw)
+        live_ag = taskrouter_agents_df(spark, raw, with_ordering=True)
         assert ag.exceptAll(live_ag).count() == 0
         assert live_ag.exceptAll(ag).count() == 0
 

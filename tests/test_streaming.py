@@ -262,33 +262,6 @@ def test_kafka_source_config(spark):
         assert {"event_id", "eventtype", "ts"} <= set(df.columns)
 
 
-def test_tws_lifecycle(spark, tmp_path):
-    """transformWithStateInPandas port of the lifecycle: same state
-    machine, same golden expectation as the applyInPandasWithState path.
-    The TWS Python state protocol needs google.protobuf; session.py
-    wires the vendored pure-Python runtime (tools/vendor/README.md)
-    when no real install exists, so this parity check EXECUTES here. If
-    neither is available the test still asserts the clean environment
-    failure rather than a hang."""
-    import pytest
-
-    from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
-        run_fixture_stream,
-    )
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        # TWS's Python state protocol is protobuf-based; without it the
-        # streaming query must fail (crashed driver worker), not hang
-        with pytest.raises(Exception, match="TransformWithState|STREAM_FAILED"):
-            run_fixture_stream(spark, str(tmp_path), tws=True)
-        return
-    got = run_fixture_stream(spark, str(tmp_path), tws=True)
-    base = run_fixture_stream(spark, str(tmp_path / "base"))
-    assert {tuple(r) for r in got.collect()} == {tuple(r) for r in base.collect()}
-
-
 def test_bucketed_lifecycle_matches_per_task(spark, tmp_path):
     """State-sharded lifecycle (one state doc per hash bucket of tasks,
     the throughput path) must emit EXACTLY the per-task variant's rows
@@ -489,28 +462,21 @@ def test_bucketed_lifecycle_hot_shard_fuzz(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "provider,buckets,tws",
+    "provider,buckets",
     [
-        (None, None, False),
+        (None, None),
         (
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
             None,
-            False,
         ),
         (
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
             8,
-            False,
-        ),
-        (
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-            8,
-            True,
         ),
     ],
-    ids=["hdfs-default", "rocksdb", "rocksdb-bucketed", "rocksdb-bucketed-tws"],
+    ids=["hdfs-default", "rocksdb", "rocksdb-bucketed"],
 )
-def test_streaming_restart_exactly_once(spark, provider, buckets, tws):
+def test_streaming_restart_exactly_once(spark, provider, buckets):
     """Failure-recovery contract: stop the streaming pipeline mid-fixture,
     then restart from the SAME checkpoint with the remaining files PLUS a
     redelivered copy of already-processed events. The stateful lifecycle,
@@ -525,11 +491,7 @@ def test_streaming_restart_exactly_once(spark, provider, buckets, tws):
     heap and checkpointed incrementally). The rocksdb-bucketed case
     restarts the STATE-SHARDED keying (multi-task state documents +
     min-deadline timer must both come back from the checkpoint) —
-    certifying the throughput path recovers exactly-once too. The
-    rocksdb-bucketed-tws case restarts the transformWithStateInPandas
-    MapState form of the same sharding (per-task map entries + the
-    deadline-index value state + the registered timer must all recover
-    from the RocksDB checkpoint)."""
+    certifying the throughput path recovers exactly-once too."""
     import json
     import os
     import shutil
@@ -553,9 +515,7 @@ def test_streaming_restart_exactly_once(spark, provider, buckets, tws):
             .option("maxFilesPerTrigger", 1)
             .load(indir)
         )
-        wide = wide_conversation_segments_stream(
-            parse_stream(raw), buckets=buckets, tws=tws
-        )
+        wide = wide_conversation_segments_stream(parse_stream(raw), buckets=buckets)
         q = write_segments_stream(wide, fact, ck).trigger(availableNow=True).start()
         q.awaitTermination(300)
 
@@ -877,91 +837,6 @@ def test_lifecycle_buckets_derivation():
     ) == LIFECYCLE_BUCKETS
 
 
-def test_tws_bucketed_lifecycle_matches_per_task(spark, tmp_path):
-    """The MapState-backed TWS bucketed lifecycle (per-task RocksDB
-    entries + a small deadline index, instead of one JSON blob per
-    shard) must emit EXACTLY the per-task variant's rows on the full
-    fixture — including the timeout-driven CORRUPTED conversations
-    (timer fire at min deadline + data-path reap of co-resident expired
-    tasks)."""
-    from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
-        run_fixture_stream,
-    )
-
-    got = run_fixture_stream(spark, str(tmp_path), buckets=8, tws=True).cache()
-    base = run_fixture_stream(spark, str(tmp_path / "base")).cache()
-    g = {tuple(r) for r in got.collect()}
-    b = {tuple(r) for r in base.collect()}
-    assert any("CORRUPTED" in str(r) for r in b)
-    assert g == b, (list(g - b)[:3], list(b - g)[:3])
-
-
-def test_tws_bucketed_coresident_expired_task_reaped(spark, tmp_path):
-    """The deterministic co-resident-expiry scenario (see the
-    applyInPandasWithState variant above) through the TWS MapState
-    keying: the expired task must be reaped from the data path while
-    its bucket keeps receiving other tasks' events, and the late event
-    must land on fresh state."""
-    import datetime as dt
-
-    from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
-        run_fixture_stream,
-    )
-
-    t0 = dt.datetime(2024, 7, 1, 8, 0, 0)
-    common = dict(task_queue_name="Q", task_queue_sid="WQ", workflow_name="WF",
-                  task_channel_unique_name="voice")
-    evs = [
-        _ce("RT", 1, "task-queue.entered", t0, task_sid="TA", **common),
-        _ce("RT", 2, "reservation.created", t0 + dt.timedelta(seconds=2),
-            task_sid="TA", reservation_sid="RA", worker_sid="W1", **common),
-        _ce("RT", 3, "reservation.accepted", t0 + dt.timedelta(seconds=10),
-            task_sid="TA", reservation_sid="RA", worker_sid="W1", **common),
-        _ce("RT", 4, "task-queue.entered", t0 + dt.timedelta(seconds=5),
-            task_sid="TB", **common),
-        _ce("RT", 5, "reservation.created", t0 + dt.timedelta(minutes=25),
-            task_sid="TB", reservation_sid="RB", worker_sid="W2", **common),
-        _ce("RT", 6, "reservation.accepted", t0 + dt.timedelta(minutes=26),
-            task_sid="TB", reservation_sid="RB", worker_sid="W2", **common),
-        _ce("RT", 7, "reservation.completed", t0 + dt.timedelta(minutes=30),
-            task_sid="TA", reservation_sid="RA", worker_sid="W1", **common),
-        _ce("RT", 8, "reservation.completed", t0 + dt.timedelta(minutes=31),
-            task_sid="TB", reservation_sid="RB", worker_sid="W2", **common),
-    ]
-    got = run_fixture_stream(
-        spark, str(tmp_path / "bkt"), files=len(evs), buckets=1, tws=True,
-        events_in=evs,
-    ).cache()
-    base = run_fixture_stream(
-        spark, str(tmp_path / "per"), files=len(evs), events_in=evs
-    ).cache()
-    g = {tuple(r) for r in got.collect()}
-    b = {tuple(r) for r in base.collect()}
-    assert any("CORRUPTED" in str(r) for r in b)
-    assert g == b, (list(g - b)[:4], list(b - g)[:4])
-
-
-def test_tws_bucketed_lifecycle_fuzz_parity(spark, tmp_path):
-    """Randomized scenario mix through the TWS MapState bucketed keying
-    vs per-task — set-equality of all emitted rows."""
-    from tests.test_fuzz_parity import _gen_events
-
-    from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
-        run_fixture_stream,
-    )
-
-    events = _gen_events(seed=4412, n_tasks=40)
-    got = run_fixture_stream(
-        spark, str(tmp_path / "bkt"), buckets=4, tws=True, events_in=events
-    ).cache()
-    base = run_fixture_stream(
-        spark, str(tmp_path / "per"), events_in=events
-    ).cache()
-    g = {tuple(r) for r in got.collect()}
-    b = {tuple(r) for r in base.collect()}
-    assert b and g == b, (len(g), len(b), list(g - b)[:3], list(b - g)[:3])
-
-
 def test_agent_status_idle_ttl_bounds_state(spark, tmp_path):
     """State-boundedness under worker churn: with idle_ttl armed, a
     worker whose open interval sits idle past the horizon has its state
@@ -1159,11 +1034,11 @@ def test_keying_parity_under_cross_batch_disorder(spark, tmp_path, seed):
     """Delivery order shuffled ACROSS micro-batches (not just within):
     some events arrive late relative to the watermark and are dropped,
     others land in earlier/later batches than event-time order would
-    place them. Whatever the resulting emission set is, all three state
-    keyings — per-task, bucketed blob, bucketed TWS MapState — must
-    produce it identically (same files -> same batches -> same watermark
-    trajectory -> same drops), so the keying remains a pure plan knob
-    even under disordered transport."""
+    place them. Whatever the resulting emission set is, both state
+    keyings — per-task and bucketed — must produce it identically (same
+    files -> same batches -> same watermark trajectory -> same drops),
+    so the keying remains a pure plan knob even under disordered
+    transport."""
     import random
 
     from tests.test_fuzz_parity import _gen_events
@@ -1180,18 +1055,10 @@ def test_keying_parity_under_cross_batch_disorder(spark, tmp_path, seed):
     bkt = run_fixture_stream(
         spark, str(tmp_path / "bkt"), buckets=4, events_in=events, keep_order=True
     ).cache()
-    tws_b = run_fixture_stream(
-        spark, str(tmp_path / "twsb"), buckets=4, tws=True, events_in=events,
-        keep_order=True,
-    ).cache()
-    tws_p = run_fixture_stream(
-        spark, str(tmp_path / "twsp"), tws=True, events_in=events, keep_order=True
-    ).cache()
     b = {tuple(r) for r in base.collect()}
     assert b, "disordered spool must still emit rows"
-    for name, df in (("bucketed", bkt), ("tws-bucketed", tws_b), ("tws-per-task", tws_p)):
-        g = {tuple(r) for r in df.collect()}
-        assert g == b, (name, len(g), len(b), list(g - b)[:3], list(b - g)[:3])
+    g = {tuple(r) for r in bkt.collect()}
+    assert g == b, (len(g), len(b), list(g - b)[:3], list(b - g)[:3])
 
 
 def test_scale_stream_summary_matches_closed_form(spark, tmp_path):

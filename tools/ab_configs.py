@@ -31,7 +31,6 @@ from twilio_event_streams_reporting_example_spark.session import get_spark as _g
 def get_spark(app="ab", shuffle_partitions=None):
     s = None
     # replicate session.get_spark but with extra confs
-    sess._ensure_protobuf_path()
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sp = shuffle_partitions if shuffle_partitions is not None else cpus
     b = (SparkSession.builder.master(f"local[{cpus}]").appName(app)
@@ -41,7 +40,7 @@ def get_spark(app="ab", shuffle_partitions=None):
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", sess.driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -52,8 +52,7 @@ def spool_sparse_touch(spark, outdir: str, n_dormant: int, n_active: int,
     the remaining batches. Every micro-batch touches nearly
     every shard, but only the active tasks' state changes — the
     shape where the blob shard re-serializes all co-resident
-    dormant fat state per batch and MapState rewrites only the
-    touched entries. Returns total event count."""
+    dormant fat state per batch. Returns total event count."""
     from pyspark.sql import functions as F
 
     from twilio_event_streams_reporting_example_spark.session import (
@@ -273,8 +272,8 @@ def main() -> int:
             return ordered_dir[0]
 
         # Per-pipeline run-to-run spread is real and large (round-10
-        # record: TWS 10.3k vs 23.7k events/s back to back) — a single
-        # run is unreadable as a trend, so every published throughput is
+        # record: one pipeline at 10.3k vs 23.7k events/s back to back) —
+        # a single run is unreadable as a trend, so every published throughput is
         # the MEDIAN of ``repeats`` independent availableNow runs (fresh
         # checkpoint each: reusing one would resume and process nothing)
         # with the min/max published alongside (r10 VERDICT item 4).
@@ -376,28 +375,9 @@ def main() -> int:
             lambda ev: conversation_segments_stream(ev, buckets=1024),
             lag_probe=True,
         )
-        # same bucket keying on transformWithStateInPandas with per-task
-        # MapState (RocksDB rewrites only touched tasks, not the shard
-        # blob) — TWS requires the RocksDB state store provider
-        provider_key = "spark.sql.streaming.stateStore.providerClass"
-        prev_provider = spark.conf.get(provider_key, None)
-        try:
-            spark.conf.set(
-                provider_key,
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
-            run(
-                "lifecycle_bucketed_tws",
-                lambda ev: conversation_segments_stream(ev, buckets=1024, tws=True),
-            )
-        finally:
-            if prev_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev_provider)
         # sparse-touch: dormant fat state + active minority per batch —
-        # the shape where per-entry MapState beats the whole-shard blob
+        # the adversarial shape for the whole-shard blob (every touched
+        # shard rewrites all its dormant tasks)
         sp_dormant = int(os.environ.get("SPARK_GRAFT_SPARSE_DORMANT", "50000"))
         sp_active = int(os.environ.get("SPARK_GRAFT_SPARSE_ACTIVE", "10000"))
         sp_dir = os.path.join(work, "sparse_in")
@@ -408,24 +388,6 @@ def main() -> int:
             sp_dir,
             sp_events,
         )
-        prev_provider = spark.conf.get(provider_key, None)
-        try:
-            spark.conf.set(
-                provider_key,
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
-            run_sparse(
-                "lifecycle_sparse_touch_tws",
-                lambda ev: conversation_segments_stream(ev, buckets=1024, tws=True),
-                sp_dir,
-                sp_events,
-            )
-        finally:
-            if prev_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev_provider)
         run("hourly_window", hourly_event_counts_stream, lag_probe=True)
 
         # The round-15 streaming scale CERTIFICATE path, measured: the

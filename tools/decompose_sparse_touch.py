@@ -63,8 +63,8 @@ def _pct(xs, f):
 def _batch_breakdown(q) -> dict:
     """p50/p95 of every durationMs component and, PER STATE OPERATOR
     (the lifecycle pipelines carry two: parse_stream's
-    dropDuplicatesWithinWatermark and the applyInPandasWithState /
-    transformWithState lifecycle), the commit/row/memory stats —
+    dropDuplicatesWithinWatermark and the applyInPandasWithState
+    lifecycle), the commit/row/memory stats —
     keyed by the operator's reported name."""
     durs: dict[str, list[float]] = {k: [] for k in _DUR_KEYS}
     st: dict[str, dict[str, list[float]]] = {}

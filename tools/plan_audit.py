@@ -87,7 +87,6 @@ INFO_NODES = (
     # artifact. StateStoreSave/SessionWindowStateStoreSave are the
     # built-in streaming-agg state nodes (hourly windows, sessions).
     "FlatMapGroupsInPandasWithState",
-    "TransformWithStateInPySpark",
     "StateStoreSave",
     "SessionWindowStateStoreSave",
 )
@@ -352,10 +351,6 @@ def streaming_plans(spark) -> dict[str, str]:
         "stream:segments_per_task": lambda: segment_emissions_stream(ev),
         "stream:segments_bucketed": lambda: segment_emissions_stream(
             ev, buckets=8
-        ),
-        "stream:segments_tws": lambda: segment_emissions_stream(ev, tws=True),
-        "stream:segments_tws_bucketed": lambda: segment_emissions_stream(
-            ev, tws=True, buckets=8
         ),
         "stream:segments_wide": lambda: wide_conversation_segments_stream(ev),
         "stream:agent_status": lambda: agent_status_emissions_stream(ev),

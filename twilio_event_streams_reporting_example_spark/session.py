@@ -8,34 +8,20 @@ exception of shuffle partitions which scale with cluster cores / input size.
 from __future__ import annotations
 
 import os
-import sys
 
 from pyspark.sql import SparkSession
 
 
-def _ensure_protobuf_path() -> None:
-    """Make the vendored pure-Python protobuf runtime importable when no
-    real protobuf install exists (tools/vendor/README.md): pyspark's
-    transformWithStateInPandas state protocol needs google.protobuf on
-    the driver AND python workers, so the path must land in PYTHONPATH
-    BEFORE the JVM (and hence the python workers it spawns) starts. A
-    deployment that ships protobuf normally never touches the vendor."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return
-    except ImportError:
-        pass
-    vendor = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools", "vendor"
-    )
-    if not os.path.isdir(os.path.join(vendor, "google", "protobuf")):
-        return
-    if vendor not in sys.path:
-        sys.path.insert(0, vendor)
-    pp = os.environ.get("PYTHONPATH", "")
-    if vendor not in pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (pp + os.pathsep + vendor) if pp else vendor
+def driver_memory() -> str:
+    """Driver heap setting: ``$SPARK_GRAFT_DRIVER_MEM`` when set, else
+    half of the host's physical RAM capped at 16g. In local mode the
+    driver JVM shares the host with the Python workers and the test or
+    bench process, so its heap may take only half of RAM."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys_mb = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")) >> 20
+    return f"{min(16 << 10, phys_mb // 2)}m"
 
 
 def scale_input_partitions(spark: "SparkSession") -> int:
@@ -73,7 +59,6 @@ def get_spark(
         be sized so each task reads 100-200 MB of shuffle data (AQE coalesce
         makes the exact number less critical as long as it's not too low).
     """
-    _ensure_protobuf_path()
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
         shuffle_partitions = cpus
@@ -87,7 +72,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # Console progress bars write \r-separated fragments to the merged
         # output stream; a fragment glued onto the front of a machine-read

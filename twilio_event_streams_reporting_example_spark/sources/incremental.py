@@ -95,7 +95,7 @@ def incremental_taskrouter_update(
     """Merge one new batch of raw CloudEvents into the durable tables.
     Returns the paths plus the list of rewritten fact dates."""
     from ..plans.taskrouter import ingest_taskrouter, segments_from_parsed
-    from ..streaming.taskrouter_stream import _merge_agents
+    from .sinks import upsert_agents
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     paths = _paths(base_dir)
@@ -193,17 +193,9 @@ def incremental_taskrouter_update(
     # 6. latest-wins merge of the agents dimension
     from ..plans.taskrouter import taskrouter_agents_df
 
-    batch_dim = taskrouter_agents_df(spark, new_raw, with_ordering=True)
-    existing = spark.read.parquet(paths["agents"])
-    merged_dim = _merge_agents(existing, batch_dim)
-    staging = f"{paths['agents']}__staging"
-    merged_dim.coalesce(1).write.mode("overwrite").parquet(staging)
-    import os
-    import shutil
-
-    if os.path.exists(paths["agents"]):
-        shutil.rmtree(paths["agents"])
-    os.replace(staging, paths["agents"])
+    upsert_agents(
+        taskrouter_agents_df(spark, new_raw, with_ordering=True), paths["agents"]
+    )
 
     new_parsed.unpersist()
     scoped_log.unpersist()

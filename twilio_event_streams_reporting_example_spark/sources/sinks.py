@@ -21,7 +21,10 @@ incremental daily recompute replaces only the affected days.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+import shutil
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -57,23 +60,49 @@ def write_agents(agents: DataFrame, path: str) -> None:
     agents.coalesce(1).write.mode("overwrite").parquet(path)
 
 
-def materialize_taskrouter(spark: SparkSession, raw: DataFrame, base_dir: str) -> dict[str, str]:
-    """Full materialization pass: event log + fact + dimension.
+def _merge_agents(existing: DataFrame | None, batch_dim: DataFrame) -> DataFrame:
+    """Latest-wins merge of a batch's agent rows into the current dim:
+    newest ``last_ts`` supplies the whole attribute row + state/date_left
+    (each reference upsert fully overwrites, events.js:240-246);
+    date_joined keeps the global minimum."""
+    from ..taskrouter.schema import AGENT_COLUMNS
 
-    Returns the written paths. The fact/dim recompute reads the same
-    parsed log the event-log sink wrote — one parse, three writes."""
-    from ..plans.taskrouter import (
-        ingest_taskrouter,
-        taskrouter_agents_df,
-        taskrouter_segments_df,
+    merged = batch_dim if existing is None else existing.unionByName(batch_dim)
+    attr_cols = [c for c, _ in AGENT_COLUMNS if c not in ("agent_uuid", "date_joined")]
+    packed = merged.select(
+        "agent_uuid",
+        "date_joined",
+        "last_ts",
+        F.struct(*attr_cols).alias("row"),
     )
+    agg = packed.groupBy("agent_uuid").agg(
+        F.max_by("row", "last_ts").alias("row"),
+        F.min("date_joined").alias("date_joined"),
+        F.max("last_ts").alias("last_ts"),
+    )
+    return agg.select(
+        "agent_uuid",
+        *[F.col(f"row.{c}").alias(c) for c in attr_cols if c != "date_joined"],
+        "date_joined",
+        "last_ts",
+    ).select(*[c for c, _ in AGENT_COLUMNS], "last_ts")
 
-    paths = {
-        "event_log": f"{base_dir}/event_log",
-        "segments": f"{base_dir}/segments",
-        "agents": f"{base_dir}/agents",
-    }
-    write_event_log(ingest_taskrouter(raw), paths["event_log"])
-    write_segments(taskrouter_segments_df(spark, raw), paths["segments"])
-    write_agents(taskrouter_agents_df(spark, raw), paths["agents"])
-    return paths
+
+def upsert_agents(batch_dim: DataFrame, path: str) -> None:
+    """Merge a batch's agent rows (``taskrouter_agents_df(...,
+    with_ordering=True)``, so each carries ``last_ts``) into the durable
+    dimension at ``path``, creating it if absent.
+
+    On plain parquet the merge is read→union→latest-wins→staging-write→
+    swap (atomic enough for a single writer); on a table format with
+    MERGE INTO (Delta/Iceberg) the same ``_merge_agents`` plan becomes
+    the MERGE source. Both the batch incremental update and the
+    streaming foreachBatch sink upsert through here."""
+    existing = (
+        batch_dim.sparkSession.read.parquet(path) if os.path.exists(path) else None
+    )
+    staging = f"{path}__staging"
+    write_agents(_merge_agents(existing, batch_dim), staging)
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    os.replace(staging, path)
